@@ -15,7 +15,12 @@ lvl_compact) repeat against fresh dirs or hardlink snapshots (DB.snapshot
 
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
-   "runs": 3, "load_avg": {...}, "all_runs": {...}}
+   "runs": 3, "load_avg": {...}, "all_runs": {...}, "modes": {...}}
+
+`modes` tags how an entry submits its queries when that is not one at a
+time: "concurrent" entries (matchers and selection since r11) submit
+their independent queries from a thread pool, so their numbers do not
+compare with the serial numbers of earlier records.
 """
 
 from __future__ import annotations
@@ -49,6 +54,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     loads: dict[str, float] = {}
+    modes: dict[str, str] = {}
 
     # machine-state calibration: a fixed data-independent JVM job, timed
     # warm. On this VM class a whole SESSION can run 2-3x slow (thin-
@@ -151,6 +157,7 @@ def main() -> None:
                 )
 
         bench("matchers", run_matchers)
+        modes["matchers"] = "concurrent"
 
         # OpenMetrics backfill parse path (r6, promtool
         # create-blocks-from): the store's full sample set rendered to
@@ -289,6 +296,7 @@ def main() -> None:
                 )
 
         bench("selection", run_selection)
+        modes["selection"] = "concurrent"
 
         # training-sequence chunking (map-only fan-out over the corpus)
         bench("chunking", q_entry("docs_chunk_windows"))
@@ -390,6 +398,7 @@ def main() -> None:
                     "load_avg": loads,
                     "calibration_sec": calibration,
                     "all_runs": all_runs,
+                    "modes": {k: v for k, v in modes.items() if k in timings},
                 }
             )
         )

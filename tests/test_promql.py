@@ -540,6 +540,51 @@ def test_vector_comparison_and_setops(spark, frame):
     assert set(got_or) == set(clicks) | extra
 
 
+# Every fused use of the window chain (RangeQuery._window_frame with
+# N > 1: a binop, a set op) against the general path it replaces,
+# obtained by making the chain decline N > 1 — each operand is then
+# evaluated on its own and the two vectors are joined.
+FUSED_WINDOW_CASES = [
+    # same name on both sides, definedness differing per side (count
+    # needs 1 sample, rate 2): a row defined on EITHER side is kept
+    "count_over_time(lonely[9s]) or rate(lonely[9s])",
+    "count_over_time(click[9s]) or rate(click[9s])",
+    "sum_over_time(click[9s]) unless on (user) (rate(click[9s]) > 1000)",
+    "irate(click[9s]) and on (user) rate(click[9s])",
+    # distinct names: one chain over the union of both metrics' series
+    "sum_over_time(click[9s]) unless on (user) (max_over_time(gauge[9s]) > 1000)",
+    "sum_over_time(click[9s]) > 5 unless on (user) (max_over_time(gauge[9s]) > 4)",
+    "max_over_time(gauge[9s]) or count_over_time(lonely[9s])",
+    # binop over the identical selector: row identity, no signature join
+    "sum_over_time(click[15s]) / count_over_time(click[15s])",
+    "rate(click[9s]) > bool increase(click[9s])",
+]
+
+
+@pytest.mark.parametrize("expr", FUSED_WINDOW_CASES)
+def test_fused_window_chain_matches_general_path(spark, frame, monkeypatch, expr):
+    q = P.RangeQuery(frame, START, END, STEP, lookback_ms=LOOKBACK)
+
+    def rows(df):
+        return sorted((r["labels_str"], r["t"], r["value"]) for r in df.collect())
+
+    fused = q.run(expr)
+    got = rows(fused)
+    # the fused plan is one chain: no signature or set-op join
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    for join in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
+        assert join not in plan, f"fused window chain still joins: {join}"
+    chain = P.RangeQuery._window_frame
+    monkeypatch.setattr(
+        P.RangeQuery,
+        "_window_frame",
+        lambda self, named: chain(self, named) if len(named) == 1 else None,
+    )
+    general = q.run(expr)
+    assert "Join" in general._jdf.queryExecution().executedPlan().toString()
+    assert got == rows(general)
+
+
 def test_group_left_ratio(spark, frame):
     # per-series click count divided by the per-user total (sum by user):
     # many-to-one with the many side keeping its labels minus __name__

@@ -6,6 +6,7 @@ must produce the same int64 epoch-ms samples from any of them.
 """
 
 import datetime
+import os
 
 from pyspark.sql import functions as F
 
@@ -102,3 +103,28 @@ def test_events_ts_as_string(spark, tmp_path):
     )
     df.write.parquet(f"{path}/events.parquet")
     _expect(spark, path)
+
+
+def test_table_memo_misses_on_nested_rewrite(spark, tmp_path):
+    # a partitioned table keeps its data files one level down; rewriting
+    # one of them in place must invalidate the memoized plan
+    from tsdb_spark.sources.events import _table_memo
+
+    part = tmp_path / "t.parquet" / "k=1"
+    part.mkdir(parents=True)
+    data = part / "part-0.parquet"
+    data.write_bytes(b"a")
+    builds = []
+
+    def build():
+        builds.append(object())
+        return builds[-1]
+
+    path = str(tmp_path / "t.parquet")
+    first = _table_memo(spark, path, "t", build)
+    assert _table_memo(spark, path, "t", build) is first  # unchanged: hit
+    st = data.stat()
+    data.write_bytes(b"bb")
+    os.utime(data, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert _table_memo(spark, path, "t", build) is not first
+    assert len(builds) == 2

@@ -49,7 +49,7 @@ from tsdb_spark.schema import (
     SERIES_SCHEMA,
     TOMBSTONES_SCHEMA,
 )
-from tsdb_spark.session import configure
+from tsdb_spark.session import configure, tree_fingerprint
 
 
 @dataclass
@@ -367,36 +367,20 @@ class DB:
         df = self.spark.createDataFrame([], schema)
         return df
 
-    def _samples_fingerprint(self):
-        """Cheap driver-side identity of the samples dir: sorted
-        (relpath, size, mtime). Every rewrite path publishes new
-        uuid-named files via _swap_dir, so any mutation — append,
-        compact, vacuum, clean, retention — changes the fingerprint."""
-        base = self._samples_path
-        if not os.path.isdir(base):
-            return None
-        out = []
-        for root, _dirs, files in os.walk(base):
-            rel = os.path.relpath(root, base)
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                st = os.stat(os.path.join(root, f))
-                out.append((rel, f, st.st_size, st.st_mtime_ns))
-        out.sort()
-        return tuple(out) or None
-
     def samples(self) -> DataFrame:
         """The samples fact relation. The DataFrame (with its resolved
         parquet file index) is reused while the on-disk file set is
         unchanged: re-listing the partition tree JVM-side costs ~0.25s
         per call at 124 buckets and grows with the store, while the
-        os.walk fingerprint is milliseconds. Unlike series(), the data
-        is NOT persisted — only the plan is reused."""
+        os.walk fingerprint (tree_fingerprint) is milliseconds. Every
+        rewrite path publishes new uuid-named files via _swap_dir, so
+        any mutation — append, compact, vacuum, clean, retention —
+        changes the fingerprint. Unlike series(), the data is NOT
+        persisted — only the plan is reused."""
         schema = "series_id LONG, t LONG, v DOUBLE, ingest_seq LONG, t_bucket LONG"
-        fp = self._samples_fingerprint()
+        fp = tree_fingerprint(self._samples_path)
         cached = getattr(self, "_samples_cache", None)
-        if cached is not None and cached[0] == fp:
+        if cached is not None and fp is not None and cached[0] == fp:
             return cached[1]
         df = self._read_or_empty(self._samples_path, schema)
         self._samples_cache = (fp, df)

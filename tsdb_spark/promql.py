@@ -1276,21 +1276,31 @@ _REGRESSION_FNS = ("deriv", "predict_linear")
 
 # window-aggregate builders: (series, T) group → centi-unit columns
 def _window_agg(fn: str, range_ms: int, param: float | None = None):
+    """The aggregates fn's value is computed from, as (alias, formula
+    key, Column) triples. An alias names the same formula in every fn
+    that uses it (a shared base block plus per-family extras), so a
+    fused chain computing several fns dedupes the union by alias. The
+    key equals the alias except for the two aliases whose formula
+    depends on the call: pct_c (one per φ) and ts_of (max vs min) — a
+    fused chain over two different keys for one alias is not built."""
+    out: list = []
+
+    def agg(alias: str, col: Column, key=None) -> None:
+        out.append((alias, key or alias, col.alias(alias)))
+
     vc = F.col("vc")
     fin = F.abs(vc) < _VC_FIN_LIM
     finz = F.when(fin, vc).otherwise(F.lit(0))  # finite part, 0 elsewhere
-    base = [
-        F.count("*").alias("n"),
-        F.min("t").alias("first_t"),
-        F.max("t").alias("last_t"),
-        F.min_by("vc", "t").alias("first_c"),
-        F.max_by("vc", "t").alias("last_c"),
-        # per-window non-finite census: drives the IEEE branch in
-        # _window_value and keeps every exact long sum sentinel-free
-        F.sum(F.when(vc == _VC_NAN, 1).otherwise(F.lit(0))).alias("n_nan"),
-        F.sum(F.when(vc == _VC_PINF, 1).otherwise(F.lit(0))).alias("n_pinf"),
-        F.sum(F.when(vc == _VC_NINF, 1).otherwise(F.lit(0))).alias("n_ninf"),
-    ]
+    agg("n", F.count("*"))
+    agg("first_t", F.min("t"))
+    agg("last_t", F.max("t"))
+    agg("first_c", F.min_by("vc", "t"))
+    agg("last_c", F.max_by("vc", "t"))
+    # per-window non-finite census: drives the IEEE branch in
+    # _window_value and keeps every exact long sum sentinel-free
+    agg("n_nan", F.sum(F.when(vc == _VC_NAN, 1).otherwise(F.lit(0))))
+    agg("n_pinf", F.sum(F.when(vc == _VC_PINF, 1).otherwise(F.lit(0))))
+    agg("n_ninf", F.sum(F.when(vc == _VC_NINF, 1).otherwise(F.lit(0))))
     if fn in ("rate", "increase", "irate", "resets"):
         # counter semantics: per-pair drop facts, first-pair fact excluded
         # when its left neighbor precedes the window. Float comparison
@@ -1303,57 +1313,40 @@ def _window_agg(fn: str, range_ms: int, param: float | None = None):
         nonan = (vc != _VC_NAN) & (pvc != _VC_NAN)
         drop_i = pvc.isNotNull() & fin & (F.abs(pvc) < _VC_FIN_LIM) & (vc < pvc)
         drop_f = pvc.isNotNull() & nonan & (vc < pvc)
-        base += [
-            F.sum(F.when(drop_i, pvc).otherwise(F.lit(0))).alias("drop_sum"),
-            F.sum(F.when(drop_f, 1).otherwise(F.lit(0))).alias("reset_n"),
-            F.min_by(
-                F.when(drop_i, pvc).otherwise(F.lit(0)), "t"
-            ).alias("first_drop"),
-            F.min_by(
-                F.when(drop_f, 1).otherwise(F.lit(0)), "t"
-            ).alias("first_reset"),
-            F.sum(
-                F.when(drop_f, _vc_decode(pvc)).otherwise(F.lit(0.0))
-            ).alias("drop_sum_d"),
-            F.min_by(
-                F.when(drop_f, _vc_decode(pvc)).otherwise(F.lit(0.0)), "t"
-            ).alias("first_drop_d"),
-        ]
+        agg("drop_sum", F.sum(F.when(drop_i, pvc).otherwise(F.lit(0))))
+        agg("reset_n", F.sum(F.when(drop_f, 1).otherwise(F.lit(0))))
+        agg("first_drop", F.min_by(F.when(drop_i, pvc).otherwise(F.lit(0)), "t"))
+        agg("first_reset", F.min_by(F.when(drop_f, 1).otherwise(F.lit(0)), "t"))
+        agg(
+            "drop_sum_d",
+            F.sum(F.when(drop_f, _vc_decode(pvc)).otherwise(F.lit(0.0))),
+        )
+        agg(
+            "first_drop_d",
+            F.min_by(F.when(drop_f, _vc_decode(pvc)).otherwise(F.lit(0.0)), "t"),
+        )
     if fn == "changes":
-        base += [
-            F.sum(
-                F.when((F.col("pvc").isNotNull()) & (F.col("vc") != F.col("pvc")), 1)
-                .otherwise(F.lit(0))
-            ).alias("chg_sum"),
-            F.min_by(
-                F.when(
-                    (F.col("pvc").isNotNull()) & (F.col("vc") != F.col("pvc")), 1
-                ).otherwise(F.lit(0)),
-                "t",
-            ).alias("first_chg"),
-        ]
+        chg = (F.col("pvc").isNotNull()) & (F.col("vc") != F.col("pvc"))
+        agg("chg_sum", F.sum(F.when(chg, 1).otherwise(F.lit(0))))
+        agg("first_chg", F.min_by(F.when(chg, 1).otherwise(F.lit(0)), "t"))
     if fn in ("irate", "idelta"):
-        base += [
-            F.max_by("pvc", "t").alias("last_pvc"),
-            F.max_by("pt", "t").alias("last_pt"),
-        ]
+        agg("last_pvc", F.max_by("pvc", "t"))
+        agg("last_pt", F.max_by("pt", "t"))
     if fn in ("sum_over_time", "avg_over_time"):
-        base.append(F.sum(finz).alias("sum_c"))
+        agg("sum_c", F.sum(finz))
     if fn == "min_over_time":
         # finite-only min (null-skipping); ±Inf/NaN resolved from the
         # census in _window_value — NaN is skipped unless all-NaN
-        base.append(F.min(F.when(fin, vc)).alias("min_c"))
+        agg("min_c", F.min(F.when(fin, vc)))
     if fn == "max_over_time":
-        base.append(F.max(F.when(fin, vc)).alias("max_c"))
+        agg("max_c", F.max(F.when(fin, vc)))
     if fn in ("stddev_over_time", "stdvar_over_time"):
         # exact integer sums (|vc| < 3e6 and window counts < 1e6 keep
         # every product far under 2^63); the variance is ONE double
         # expression over them — order-independent across engines.
         # Sentinel rows excluded (any non-finite → NaN variance anyway)
-        base += [
-            F.sum(finz).alias("sum_c"),
-            F.sum(F.when(fin, vc * vc).otherwise(F.lit(0))).alias("sumsq_c"),
-        ]
+        agg("sum_c", F.sum(finz))
+        agg("sumsq_c", F.sum(F.when(fin, vc * vc).otherwise(F.lit(0))))
     if fn == "quantile_over_time":
         # exact percentile at rank φ(n-1) with linear interpolation over
         # integer centi-units (matches DuckDB quantile_cont and the
@@ -1366,16 +1359,17 @@ def _window_agg(fn: str, range_ms: int, param: float | None = None):
         # a clamped placeholder so the plan stays analyzable
         _phi = param if param is not None else 0.5
         _safe_phi = 0.5 if _phi != _phi else min(max(_phi, 0.0), 1.0)
-        base += [
-            F.expr(f"percentile(vc, {_safe_phi})").alias(
-                "pct_c"
-            ),
+        agg(
+            "pct_c",
+            F.expr(f"percentile(vc, {_safe_phi})"),
+            key=("pct_c", _safe_phi),
+        )
+        agg(
+            "q_vals",
             F.array_sort(
-                F.collect_list(
-                    F.when(vc == _VC_NAN, F.lit(_VC_QNAN)).otherwise(vc)
-                )
-            ).alias("q_vals"),
-        ]
+                F.collect_list(F.when(vc == _VC_NAN, F.lit(_VC_QNAN)).otherwise(vc))
+            ),
+        )
     if fn in ("ts_of_max_over_time", "ts_of_min_over_time"):
         # timestamp of the window's extreme sample (upstream 3.x
         # funcTsOfMaxOverTime); ties break to the LATEST timestamp,
@@ -1388,31 +1382,25 @@ def _window_agg(fn: str, range_ms: int, param: float | None = None):
             vc == _VC_NAN, F.lit(-(1 << 62) if ismax else (1 << 62))
         ).otherwise(vc)
         pick = F.max_by if ismax else F.min_by
-        key = (
+        order = (
             F.struct(vkey.alias("k"), F.col("t"))
             if ismax
             else F.struct(vkey.alias("k"), (-F.col("t")).alias("nt"))
         )
-        base.append(pick("t", key).alias("ts_of"))
+        agg("ts_of", pick("t", order), key=("ts_of", fn))
     if fn == "mad_over_time":
         # median absolute deviation (upstream experimental
         # funcMadOverTime): median computed exactly on centi-units,
         # then the median of |x − med| over the window's value array —
         # per-group state is the window, same bound as holt_winters
-        base += [
-            F.expr("percentile(vc, 0.5)").alias("med_c"),
-            F.array_sort(F.collect_list("vc")).alias("vals_c"),
-        ]
+        agg("med_c", F.expr("percentile(vc, 0.5)"))
+        agg("vals_c", F.array_sort(F.collect_list("vc")))
     if fn in _HOLT_FNS:
         # the one window fn that is an inherently ORDERED fold: carry
         # the window's samples as a time-sorted array (per-(series, T)
         # state = that window's points, never the whole series) and run
         # the recurrence in _window_value via F.aggregate
-        base.append(
-            F.array_sort(F.collect_list(F.struct(F.col("t"), F.col("vc")))).alias(
-                "pts"
-            )
-        )
+        agg("pts", F.array_sort(F.collect_list(F.struct(F.col("t"), F.col("vc")))))
     if fn in _REGRESSION_FNS:
         # least-squares sums over x = t - grid_T (centering on the
         # grid point keeps |x| <= range_ms; slope is centering-invariant
@@ -1421,13 +1409,11 @@ def _window_agg(fn: str, range_ms: int, param: float | None = None):
         # slope is bit-stable across engines (promql/functions.go
         # linearRegression is the float-accumulating original).
         xd = (F.col("t") - F.col(_G)).cast("decimal(19,0)")
-        base += [
-            F.sum(F.col("t") - F.col(_G)).alias("sx"),
-            F.sum(finz).alias("sy"),
-            F.sum(xd * finz).alias("sxy"),
-            F.sum(xd * xd).alias("sxx"),
-        ]
-    return base
+        agg("sx", F.sum(F.col("t") - F.col(_G)))
+        agg("sy", F.sum(finz))
+        agg("sxy", F.sum(xd * finz))
+        agg("sxx", F.sum(xd * xd))
+    return out
 
 
 def _window_defined(
@@ -1842,6 +1828,46 @@ def _attach_window_values(df: DataFrame, specs) -> DataFrame:
     return df.drop(*drop) if drop else df
 
 
+def _name_pin(sel: Selector) -> tuple[str | None, list]:
+    """(value of the selector's one `=` __name__ matcher — None unless
+    there is exactly one —, the selector's other matchers)."""
+    pins = [m for m in sel.matchers if m.name == "__name__" and m.type == "="]
+    others = [m for m in sel.matchers if m not in pins]
+    return (pins[0].value if len(pins) == 1 else None), others
+
+
+def _fusable(node) -> bool:
+    """A window fn that may share a fused window chain with others
+    (RangeQuery._window_frame): a FuncCall over a name-pinned matrix
+    selector without @, that drops __name__ (last_over_time keeps it).
+    A pure AST test — non-window operands are rejected before any
+    Column is built."""
+    return (
+        isinstance(node, FuncCall)
+        and isinstance(node.arg, Selector)
+        and node.arg.at_ms is None
+        and node.fn != "last_over_time"
+        and _name_pin(node.arg)[0] is not None
+    )
+
+
+def _entry_labels(ent: Column) -> list:
+    """labels_str and labels re-projected from a key-sorted label entry
+    array (the `_ent` grouping key of a window chain, see _base)."""
+    return [
+        L.labels_str_from_entries(ent).alias("labels_str"),
+        F.map_from_entries(ent).alias("labels"),
+    ]
+
+
+def _nameless_ent() -> Column:
+    """The `_ent` entry array without __name__ — the label set of a
+    fused window row (every fused fn drops the metric name)."""
+    return F.filter(
+        F.col("_ent"), lambda e: e.getField("key") != F.lit("__name__")
+    )
+
+
 def _arith_col(op: str, a: Column, b: Column) -> Column:
     # IEEE zero-divisor semantics (PromQL: x/0 = ±Inf, 0/0 = NaN,
     # x%0 = NaN) — Spark's ANSI mode throws DIVIDE_BY_ZERO instead,
@@ -2229,67 +2255,42 @@ class RangeQuery:
         )
 
     def _eval_binvec(self, node: BinVector) -> DataFrame:
-        fused = self._fused_window_binop(node)
-        if fused is not None:
-            return fused
-        left, right = self.eval(node.left), self.eval(node.right)
-        return self._eval_binvec_frames(node, left, right)
-
-    def _fused_window_binop(self, node: BinVector) -> DataFrame | None:
-        """Fast path (r10): a binop between two window functions over the
-        IDENTICAL matrix selector — `sum_over_time(m[R]) /
-        count_over_time(m[R])`, `rate(m[R]) > increase(m[R])`, ... —
-        evaluates as ONE window chain whose groupBy computes both sides'
-        aggregates, instead of two full chains joined on the match
-        signature. Same rows out: both operands come from the same
-        (series, T) groups, both drop __name__ (last_over_time is
-        excluded), and default one-to-one matching on the name-stripped
-        label set is then row-identity — the join is provably 1:1 where
-        it is defined, and the duplicate-signature error the join's
-        unique-guard raises (two metric names collapsing onto one
-        stripped set) is preserved by the same guard here. Per side the
-        unfused plan paid a scan + repartition + dedup groupBy +
-        (optional lag window) + grid groupBy, then two more exchanges
-        for the signature join; the fused plan pays ONE of each and no
-        join. Returns None (fall through to the general path) unless
-        the exact preconditions hold."""
+        # Fast path (r10): a binop between two window functions over the
+        # IDENTICAL name-pinned matrix selector — `sum_over_time(m[R]) /
+        # count_over_time(m[R])`, `rate(m[R]) > increase(m[R])`, ... —
+        # evaluates as ONE window chain (_window_frame) instead of two
+        # chains joined on the match signature. Same rows out: both
+        # operands come from the same (series, T) groups, both drop
+        # __name__, and default one-to-one matching on the name-stripped
+        # label set is then row-identity — the join is provably 1:1
+        # where it is defined. Per side the unfused plan paid a scan +
+        # repartition + dedup groupBy + (optional lag window) + grid
+        # groupBy, then two more exchanges for the signature join; the
+        # fused plan pays ONE of each and no join.
         l, r = node.left, node.right
+        fused = None
         if (
-            node.on is not None
-            or node.ignoring is not None
-            or node.group_side is not None
+            node.on is None
+            and node.ignoring is None
+            and node.group_side is None
+            and _fusable(l)
+            and _fusable(r)
+            and l.arg == r.arg
         ):
-            return None
-        agg = self._fused_window_agg([l, r])
-        if agg is None:
-            return None
-        rng = l.arg.range_ms
-        stripped = F.filter(
-            F.col("_ent"), lambda e: e.getField("key") != F.lit("__name__")
-        )
+            fused = self._window_frame([("_lv", l), ("_rv", r)])
+        if fused is None:
+            left, right = self.eval(l), self.eval(r)
+            return self._eval_binvec_frames(node, left, right)
+        out, defined = fused
         # each unfused side dropped its null windows before the join —
-        # the AND of the two cheap defined predicates is that same row
-        # set (see _window_defined)
-        for node_ in (l, r):
-            d = _window_defined(node_.fn, rng, F.col(_G), node_.param)
+        # the AND of the two defined predicates is that same row set
+        for d in defined:
             if d is not None:
-                agg = agg.filter(d)
-        out = (
-            _attach_window_values(
-                agg,
-                [
-                    ("_lv", l.fn, rng, F.col(_G), l.param),
-                    ("_rv", r.fn, rng, F.col(_G), r.param),
-                ],
-            )
-            .select(
-                L.labels_str_from_entries(stripped).alias("labels_str"),
-                F.map_from_entries(stripped).alias("labels"),
-                F.col(_G),
-                "_lv",
-                "_rv",
-            )
-        )
+                out = out.filter(d)
+        out = out.select(*_entry_labels(_nameless_ent()), F.col(_G), "_lv", "_rv")
+        # the duplicate-signature error the join's unique-guard raises
+        # (two metric names collapsing onto one stripped set) is
+        # preserved by the same guard here
         out = _unique_guard(
             out,
             ["labels_str", _G],
@@ -2309,104 +2310,31 @@ class RangeQuery:
             "_lv", "_rv"
         )
 
-    def _fused_window_agg(self, nodes: list) -> DataFrame | None:
-        """Shared fusion core: ONE window chain whose groupBy computes
-        the union of the nodes' aggregate lists, grouped by (_ent, _G).
-        None unless every node is a window FuncCall over the IDENTICAL
-        name-pinned matrix selector.
-
-        Preconditions, and why each makes fusion exact:
-        - all nodes drop __name__ (last_over_time excluded), so every
-          fused output row carries the same stripped label set each
-          separate evaluation would;
-        - the selectors are `==`-equal (same matchers/range/offset, no
-          @-pin), so each separate chain would group the exact same
-          (series, T) cells;
-        - the selector PINS __name__ with `=`: all matched series share
-          one metric name, two distinct series can never collapse onto
-          one stripped label set, so per-(labels_str, T) uniqueness —
-          and with it the join path's duplicate-signature behavior — is
-          structurally guaranteed rather than re-checked;
-        - _window_agg aliases are formula-stable across fns (a shared
-          base block plus per-family extras), so union-by-alias dedupes
-          the overlap; the aliases that can carry DIFFERENT formulas
-          per node (pct_c with two φ values, ts_of for max vs min) are
-          detected by rendered-expression mismatch → not fusable."""
-
-        def alias_of(c) -> str:
-            return str(c).rsplit(" AS ", 1)[-1].rstrip("'>`")
-
-        if not nodes or not all(
-            isinstance(n, FuncCall)
-            and isinstance(n.arg, Selector)
-            and n.fn != "last_over_time"
-            for n in nodes
-        ):
-            return None
-        sel = nodes[0].arg
-        if sel.at_ms is not None or any(n.arg != sel for n in nodes[1:]):
-            return None
-        if not any(
-            m.name == "__name__" and m.type == "=" for m in sel.matchers
-        ):
-            return None
-        rng = sel.range_ms
-        aggs: list = []
-        by_alias: dict[str, str] = {}
-        for n in nodes:
-            for c in _window_agg(n.fn, rng, n.param):
-                a2, s2 = alias_of(c), str(c)
-                if a2 not in by_alias:
-                    aggs.append(c)
-                    by_alias[a2] = s2
-                elif by_alias[a2] != s2:
-                    return None
-        base = self._base(sel.matchers, rng, sel.offset_ms)
-        if any(n.fn in _LAG_FNS for n in nodes):
-            base = _with_lag(base)
-        cells = _grid_explode(base, self.start, self.end, self.step, rng)
-        return cells.groupBy("_ent", _G).agg(*aggs)
-
     def eval_windows(self, *named: tuple[str, str]) -> DataFrame:
         """Evaluate N window functions over the SAME name-pinned matrix
-        selector as ONE fused chain: one scan, one exchange, one
-        groupBy carrying the union of the N aggregate lists. Output
-        (labels_str, labels, t, <name_i>...). Rows where ANY value is
-        null are dropped — exactly the set an inner join on
-        (labels_str, t) of the N separate evaluations keeps. Raises
+        selector as ONE fused chain (_window_frame): one scan, one
+        exchange, one groupBy carrying the union of the N aggregate
+        lists. Output (labels_str, labels, t, <name_i>...). Rows where
+        ANY value is null are dropped — exactly the set an inner join
+        on (labels_str, t) of the N separate evaluations keeps. Raises
         when the expressions are not fusable (this is a curated entry
         point, not a planner fallback)."""
         names = [nm for nm, _ in named]
         nodes = [parse_expr(e) for _, e in named]
-        agg = self._fused_window_agg(nodes)
-        if agg is None:
+        fused = None
+        if all(_fusable(n) and n.arg == nodes[0].arg for n in nodes):
+            fused = self._window_frame(list(zip(names, nodes)))
+        if fused is None:
             raise ValueError(
                 "eval_windows needs window fns over one identical "
                 f"name-pinned matrix selector, got {[e for _, e in named]}"
             )
-        rng = nodes[0].arg.range_ms
-        stripped = F.filter(
-            F.col("_ent"), lambda e: e.getField("key") != F.lit("__name__")
-        )
-        # rows where ANY value is null are dropped — the AND of the
-        # cheap defined predicates (see _window_defined), applied
-        # before the value projection to keep the Filter node small
-        for n_ in nodes:
-            d = _window_defined(n_.fn, rng, F.col(_G), n_.param)
+        out, defined = fused
+        for d in defined:
             if d is not None:
-                agg = agg.filter(d)
-        out = _attach_window_values(
-            agg,
-            [
-                (nm, n_.fn, rng, F.col(_G), n_.param)
-                for nm, n_ in zip(names, nodes)
-            ],
-        )
+                out = out.filter(d)
         return out.select(
-            L.labels_str_from_entries(stripped).alias("labels_str"),
-            F.map_from_entries(stripped).alias("labels"),
-            F.col(_G).alias("t"),
-            *names,
+            *_entry_labels(_nameless_ent()), F.col(_G).alias("t"), *names
         )
 
     def _eval_binvec_frames(
@@ -2633,43 +2561,28 @@ class RangeQuery:
             "_lv", "_rv"
         )
 
-    def _fused_set_windows(self, node: BinSet) -> DataFrame | None:
-        """Fast path (r11, VERDICT r10 #9): a set op between
-        (optionally comparison-filtered) window functions over
-        selectors that differ ONLY in their =-pinned __name__ value —
-        promql_cmp_unless's `sum_over_time(click[2d]) > 60 unless on
-        (user) (max_over_time(view[2d]) > 200)` — evaluates as ONE
-        window chain over the union of both metrics' series, instead
-        of one full chain per metric plus a distinct + semi/anti join.
-        The set-op match becomes an existence flag computed by a
-        window function over (signature, T) partitions of the already-
-        aggregated frame (series × grid points — tiny next to the
-        sample scan). Removed outright (guide §2.4): the second scan,
-        the second repartition exchange, the second dedup+grid groupBy
-        pair, and the join's two exchanges + distinct.
-
-        Exactness:
-        - set ops match on signature SETS and allow many-to-many
-          (engine.go VectorAnd/VectorUnless/VectorOr) — the flag is
-          that same set-membership test; no uniqueness guard is
-          involved on either path;
-        - both sides' window fns drop __name__ (last_over_time is
-          excluded) and the comparison filter keeps elements untouched
-          (bool modifier excluded), so each side's row set and label
-          sets are exactly what its separate evaluation yields;
-        - every series carries exactly one __name__ value, so each
-          aggregated row belongs to one side (both when the names are
-          equal — which is also what two separate evaluations of the
-          identical selector would produce);
-        - rows are pre-filtered by each side's cheap defined-predicate
-          + comparison, i.e. exactly the rows present in the unfused
-          side vectors, so the flag ranges over the same element set.
-        """
-        if node.op not in ("and", "unless", "or"):
-            return None
-        if node.on is not None and "__name__" in node.on:
-            return None  # stripped sides carry no name to match on
-
+    def _eval_binset(self, node: BinSet) -> DataFrame:
+        # Fast path (r11): a set op between (optionally comparison-
+        # filtered) window functions over selectors that differ at most
+        # in their =-pinned __name__ — promql_cmp_unless's
+        # `sum_over_time(click[2d]) > 60 unless on (user)
+        # (max_over_time(view[2d]) > 200)` — evaluates as ONE window
+        # chain over the union of both metrics' series (_window_frame)
+        # instead of one full chain per metric plus a distinct +
+        # semi/anti join. The set-op match becomes an existence flag
+        # computed by a window function over (signature, T) partitions
+        # of the already-aggregated frame (series × grid points — tiny
+        # next to the sample scan). Exact because:
+        # - set ops match on signature SETS and allow many-to-many
+        #   (engine.go VectorAnd/VectorUnless/VectorOr) — the flag is
+        #   that same set-membership test; no uniqueness guard is
+        #   involved on either path;
+        # - the comparison filter keeps elements untouched (bool
+        #   modifier excluded), so each side's rows and label sets are
+        #   exactly what its separate evaluation yields;
+        # - a row's side flag is its side's defined-predicate +
+        #   comparison, i.e. exactly the rows present in the unfused
+        #   side vector, so the flag ranges over the same element set.
         def unwrap(side):
             if (
                 isinstance(side, BinScalar)
@@ -2679,162 +2592,65 @@ class RangeQuery:
                 return side.child, side
             return side, None
 
-        lnode, lcmp = unwrap(node.left)
-        rnode, rcmp = unwrap(node.right)
-        for fc in (lnode, rnode):
-            if not (
-                isinstance(fc, FuncCall)
-                and isinstance(fc.arg, Selector)
-                and fc.fn != "last_over_time"
-            ):
-                return None
-        sl, sr = lnode.arg, rnode.arg
-        if sl.at_ms is not None or sr.at_ms is not None:
-            return None
-        if sl.range_ms != sr.range_ms or sl.offset_ms != sr.offset_ms:
-            return None
-
-        def split_name(sel):
-            names = [
-                m for m in sel.matchers if m.name == "__name__"
-            ]
-            if len(names) != 1 or names[0].type != "=":
-                return None, None
-            return names[0].value, [
-                m for m in sel.matchers if m.name != "__name__"
-            ]
-
-        nl, others_l = split_name(sl)
-        nr, others_r = split_name(sr)
-        if nl is None or nr is None or others_l != others_r:
-            return None
-        rng = sl.range_ms
-        # union of the two fns' aggregate lists, alias-deduped with the
-        # same different-formula collision check as _fused_window_agg
-        aggs: list = []
-        by_alias: dict[str, str] = {}
-        for fc in (lnode, rnode):
-            for c in _window_agg(fc.fn, rng, fc.param):
-                a2 = str(c).rsplit(" AS ", 1)[-1].rstrip("'>`")
-                s2 = str(c)
-                if a2 not in by_alias:
-                    aggs.append(c)
-                    by_alias[a2] = s2
-                elif by_alias[a2] != s2:
-                    return None
-
-        try:
-            if nl == nr:
-                name_ms = [L.Matcher("=", "__name__", nl)]
-            else:
-                name_ms = [
-                    L.Matcher(
-                        "=~", "__name__", f"{re.escape(nl)}|{re.escape(nr)}"
-                    )
-                ]
-        except ValueError:
-            return None  # escaped name outside the checked regex subset
-        base = self._base(others_l + name_ms, rng, sl.offset_ms)
-        if lnode.fn in _LAG_FNS or rnode.fn in _LAG_FNS:
-            base = _with_lag(base)
-        cells = _grid_explode(base, self.start, self.end, self.step, rng)
-        agg = cells.groupBy("_ent", _G).agg(*aggs)
-
-        def is_side(name):
-            return F.array_contains(
-                F.col("_ent"),
-                F.struct(
-                    F.lit("__name__").alias("key"), F.lit(name).alias("value")
-                ),
-            )
-
-        def side_ok(name, fc):
-            ok = is_side(name)
-            d = _window_defined(fc.fn, rng, F.col(_G), fc.param)
-            if d is not None:
-                ok = ok & d
-            return ok
-
-        def cmp_cond(cmp_, vcol):
-            if cmp_ is None:
-                return None
-            v, s = F.col(vcol), F.lit(cmp_.scalar)
-            a, b = (s, v) if cmp_.scalar_left else (v, s)
-            return _cmp_col(cmp_.op, a, b)
-
-        # pre-drop rows whose own side's window value is undefined —
-        # in CONJUNCT form (¬side ∨ defined) and only for sides that
-        # HAVE a defined predicate: a disjunctive (side ∧ d) ∨ (side ∧
-        # d) form splits under pushdown and plants a per-row
-        # side-membership test at the scan that every row passes by
-        # construction (the __name__ IN matcher already pinned it)
-        for name, fc in ((nl, lnode), (nr, rnode)):
-            d = _window_defined(fc.fn, rng, F.col(_G), fc.param)
-            if d is not None:
-                agg = agg.filter(~is_side(name) | d)
-        l_pre = side_ok(nl, lnode)
-        r_pre = side_ok(nr, rnode)
-        out = _attach_window_values(
-            agg,
-            [
-                ("_lv", lnode.fn, rng, F.col(_G), lnode.param),
-                ("_rv", rnode.fn, rng, F.col(_G), rnode.param),
-            ],
-        )
-        l_ok, r_ok = l_pre, r_pre
-        lc, rc = cmp_cond(lcmp, "_lv"), cmp_cond(rcmp, "_rv")
-        if lc is not None:
-            l_ok = l_ok & lc
-        if rc is not None:
-            r_ok = r_ok & rc
-        out = out.select(
-            "*", l_ok.alias("_lok"), r_ok.alias("_rok")
-        ).filter(F.col("_lok") | F.col("_rok"))
-
-        from pyspark.sql import Window as _W
-
-        if node.on is not None:
-            onl = F.array(*[F.lit(k) for k in node.on])
-            key = F.filter(
-                F.col("_ent"),
-                lambda e: F.array_contains(onl, e.getField("key")),
-            )
-        else:
-            dropl = F.array(
-                F.lit("__name__"),
-                *[F.lit(k) for k in (node.ignoring or [])],
-            )
-            key = F.filter(
-                F.col("_ent"),
-                lambda e: ~F.array_contains(dropl, e.getField("key")),
-            )
-        out = out.withColumn("_sig", key)
-        w = _W.partitionBy("_sig", _G)
-        if node.op == "or":
-            flag = F.max(F.when(F.col("_lok"), 1).otherwise(0)).over(w)
-            out = out.withColumn("_flag", flag)
-            keep = F.col("_lok") | (F.col("_rok") & (F.col("_flag") == 0))
-            value = F.when(F.col("_lok"), F.col("_lv")).otherwise(F.col("_rv"))
-        else:
-            flag = F.max(F.when(F.col("_rok"), 1).otherwise(0)).over(w)
-            out = out.withColumn("_flag", flag)
-            want = 1 if node.op == "and" else 0
-            keep = F.col("_lok") & (F.col("_flag") == want)
-            value = F.col("_lv")
-        stripped = F.filter(
-            F.col("_ent"), lambda e: e.getField("key") != F.lit("__name__")
-        )
-        return out.filter(keep).select(
-            L.labels_str_from_entries(stripped).alias("labels_str"),
-            F.map_from_entries(stripped).alias("labels"),
-            F.col(_G),
-            value.alias("value"),
-        )
-
-    def _eval_binset(self, node: BinSet) -> DataFrame:
-        fused = self._fused_set_windows(node)
+        (lnode, lcmp), (rnode, rcmp) = unwrap(node.left), unwrap(node.right)
+        fused = None
+        # with on(__name__) the stripped sides carry no name to match on
+        if node.on is None or "__name__" not in node.on:
+            fused = self._window_frame([("_lv", lnode), ("_rv", rnode)])
         if fused is not None:
-            return fused
+            out, (l_def, r_def) = fused
+
+            def side_ok(defined, cmp_, vcol):
+                if cmp_ is not None:
+                    v, s = F.col(vcol), F.lit(cmp_.scalar)
+                    a, b = (s, v) if cmp_.scalar_left else (v, s)
+                    c = _cmp_col(cmp_.op, a, b)
+                    defined = c if defined is None else defined & c
+                return F.lit(True) if defined is None else defined
+
+            out = out.select(
+                "*",
+                side_ok(l_def, lcmp, "_lv").alias("_lok"),
+                side_ok(r_def, rcmp, "_rv").alias("_rok"),
+            ).filter(F.col("_lok") | F.col("_rok"))
+            if node.on is not None:
+                onl = F.array(*[F.lit(k) for k in node.on])
+                key = F.filter(
+                    F.col("_ent"),
+                    lambda e: F.array_contains(onl, e.getField("key")),
+                )
+            else:
+                dropl = F.array(
+                    F.lit("__name__"),
+                    *[F.lit(k) for k in (node.ignoring or [])],
+                )
+                key = F.filter(
+                    F.col("_ent"),
+                    lambda e: ~F.array_contains(dropl, e.getField("key")),
+                )
+            from pyspark.sql import Window
+
+            out = out.withColumn("_sig", key)
+            w = Window.partitionBy("_sig", _G)
+            lok, rok = F.col("_lok"), F.col("_rok")
+            if node.op == "or":
+                flag = F.max(F.when(lok, 1).otherwise(0)).over(w)
+                keep = lok | (rok & (F.col("_flag") == 0))
+                value = F.when(lok, F.col("_lv")).otherwise(F.col("_rv"))
+            else:
+                flag = F.max(F.when(rok, 1).otherwise(0)).over(w)
+                want = 1 if node.op == "and" else 0
+                keep = lok & (F.col("_flag") == want)
+                value = F.col("_lv")
+            return (
+                out.withColumn("_flag", flag)
+                .filter(keep)
+                .select(
+                    *_entry_labels(_nameless_ent()),
+                    F.col(_G),
+                    value.alias("value"),
+                )
+            )
         left, right = self.eval(node.left), self.eval(node.right)
 
         def _ensure_labels(df: DataFrame) -> DataFrame:
@@ -2934,35 +2750,123 @@ class RangeQuery:
             )
         )
 
-    def _windowed(self, base: DataFrame, fn: str, rng: int, param) -> DataFrame:
-        """Shared window-function tail: optional per-series lag, grid
-        fan-out, ONE combinable groupBy, final scalar value.
+    def _window_frame(self, named: list) -> tuple[DataFrame, list] | None:
+        """The one window chain every range function is evaluated by:
+        scan → optional per-series lag → grid fan-out → ONE combinable
+        groupBy → staged value projection.
 
-        `labels` rides the grouping keys as the `_ent` entry array (see
-        _base) so the groupBy stays a HashAggregate; the map is
-        re-projected afterwards."""
-        if fn in _LAG_FNS:
+        `named` holds (value alias, FuncCall) pairs. N=1 is the plain
+        range-function path (matrix selector or subquery). N>1 fuses
+        window fns that all pass _fusable and whose selectors differ at
+        most in their pinned __name__ (same other matchers, range and
+        offset) into ONE chain over the union of their names: one scan,
+        one exchange, one groupBy carrying the union of the aggregate
+        lists, instead of N chains and the joins matching them. None
+        when that does not hold.
+
+        Returns (frame, defined). The frame is grouped by (`_ent`, T)
+        — `labels` rides the grouping keys as the `_ent` entry array
+        (see _base) so the groupBy stays a HashAggregate, and callers
+        re-project the map — and carries one value column per alias.
+        defined[i] is the predicate "this row is on node i's side and
+        its value is defined" (None: always true). Rows defined on no
+        side are dropped.
+
+        Why fusion is exact:
+        - every series carries exactly one __name__ value, so each
+          aggregated row belongs to the sides pinning its name — all
+          of them when the names are equal, which is what separate
+          evaluations of the same selector would produce — and each
+          side's rows are the (series, T) cells its own chain groups;
+        - aggregates are deduped by alias; an alias whose formula key
+          differs between nodes (_window_agg: pct_c with two φ, ts_of
+          for max vs min) makes the nodes not fusable."""
+        nodes = [n for _, n in named]
+        if len(nodes) > 1 and not all(_fusable(n) for n in nodes):
+            return None
+        sel = nodes[0].arg
+        rng, matchers = sel.range_ms, getattr(sel, "matchers", None)
+        names = [None] * len(nodes)  # per node: its side's pinned name
+        if any(n.arg != sel for n in nodes):
+            pins = [_name_pin(n.arg) for n in nodes]
+            if any(
+                n.arg.range_ms != rng
+                or n.arg.offset_ms != sel.offset_ms
+                or others != pins[0][1]
+                for n, (_, others) in zip(nodes, pins)
+            ):
+                return None
+            union = list(dict.fromkeys(name for name, _ in pins))
+            if len(union) == 1:
+                name_m = L.Matcher("=", "__name__", union[0])
+            else:
+                names = [name for name, _ in pins]
+                name_m = L.Matcher(
+                    "=~", "__name__", "|".join(map(re.escape, union))
+                )
+            matchers = pins[0][1] + [name_m]
+        aggs: list = []
+        keys: dict = {}
+        for n in nodes:
+            for alias, key, col in _window_agg(n.fn, rng, n.param):
+                if alias not in keys:
+                    keys[alias] = key
+                    aggs.append(col)
+                elif keys[alias] != key:
+                    return None
+
+        if isinstance(sel, Subquery):
+            base = self._subquery_base(sel)
+        else:
+            base = self._base(matchers, rng, sel.offset_ms)
+        if any(n.fn in _LAG_FNS for n in nodes):
             base = _with_lag(base)
         cells = _grid_explode(base, self.start, self.end, self.step, rng)
-        agg = cells.groupBy("_ent", _G).agg(
-            *_window_agg(fn, rng, param),
-        )
-        # empty-value rows are dropped via the fn's cheap defined
-        # predicate BEFORE the value projection — filtering on the
-        # value column would push the full value tree into the Filter
-        # node (see _window_defined)
-        defined = _window_defined(fn, rng, F.col(_G), param)
-        if defined is not None:
-            agg = agg.filter(defined)
+        agg = cells.groupBy("_ent", _G).agg(*aggs)
+
+        side = {
+            name: F.array_contains(
+                F.col("_ent"),
+                F.struct(
+                    F.lit("__name__").alias("key"), F.lit(name).alias("value")
+                ),
+            )
+            for name in names
+            if name is not None
+        }
+        ds = [_window_defined(n.fn, rng, F.col(_G), n.param) for n in nodes]
+        defined = []
+        for name, d in zip(names, ds):
+            if name is not None:
+                d = side[name] if d is None else side[name] & d
+            defined.append(d)
+        # drop rows defined on no side with the cheap defined predicates,
+        # BEFORE the value projection — filtering on the value column
+        # would push the full value tree into the Filter node (see
+        # _window_defined). A row is kept when ANY node of its own name
+        # defines it. With several names the filter is in CONJUNCT form
+        # per name (¬side ∨ d₁ ∨ …): a disjunctive (side ∧ d) ∨ (side ∧
+        # d) form splits under pushdown and plants a per-row
+        # side-membership test at the scan that every row passes by
+        # construction (the __name__ matcher already pinned it)
+        for name in dict.fromkeys(names):
+            own = [d for nm, d in zip(names, ds) if nm == name]
+            if any(d is None for d in own):
+                continue
+            keep = own[0]
+            for d in own[1:]:
+                keep = keep | d
+            agg = agg.filter(keep if name is None else ~side[name] | keep)
         out = _attach_window_values(
-            agg, [("value", fn, rng, F.col(_G), param)]
+            agg, [(alias, n.fn, rng, F.col(_G), n.param) for alias, n in named]
         )
-        return out.select(
-            L.labels_str_from_entries(F.col("_ent")).alias("labels_str"),
-            F.map_from_entries("_ent").alias("labels"),
-            F.col(_G),
-            "value",
-        )
+        return out, defined
+
+    def _windowed(self, node: FuncCall) -> DataFrame:
+        """One range function: the window chain with N=1, labels
+        re-projected from its `_ent` grouping key."""
+        out, _ = self._window_frame([("value", node)])
+        return out.select(*_entry_labels(F.col("_ent")), F.col(_G), "value")
 
     def _eval_func(self, node: FuncCall) -> DataFrame:
         if node.arg.at_ms is not None:
@@ -2970,15 +2874,7 @@ class RangeQuery:
                 node.arg.at_ms,
                 FuncCall(node.fn, replace(node.arg, at_ms=None), node.param),
             )
-        if isinstance(node.arg, Subquery):
-            sq = node.arg
-            out = self._windowed(
-                self._subquery_base(sq), node.fn, sq.range_ms, node.param
-            )
-        else:
-            rng = node.arg.range_ms
-            base = self._base(node.arg.matchers, rng, node.arg.offset_ms)
-            out = self._windowed(base, node.fn, rng, node.param)
+        out = self._windowed(node)
         # every range function drops the metric name except
         # last_over_time (promql/functions.go shouldDropMetricName /
         # funcLastOverTime keeping the full label set)

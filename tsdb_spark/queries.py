@@ -3503,8 +3503,9 @@ GATE: tuple[str, ...] = (
     # and the r10-new promql_native_hist_binop (h+h/h-h/h*s histogram
     # arithmetic with schema downscale — engine.go VectorBinop).
     # r11 rotation (per the r10 verdict's explicit ask, item 3): the
-    # r10 fused-window evaluation path (_fused_window_binop /
-    # eval_windows, promql.py) was the riskiest rewrite of that round
+    # r10 fused-window evaluation path (the fused binop and
+    # eval_windows, both now consumers of RangeQuery._window_frame in
+    # promql.py) was the riskiest rewrite of that round
     # and none of its entries was driver-gated. IN: promql_topk_ratio
     # (fused same-selector binop under topk), promql_stat_windows
     # (3-fn eval_windows chain: stdvar/stddev/quantile), and

@@ -93,3 +93,28 @@ def get_spark(app_name: str = "tsdb_spark", shuffle_partitions: int | None = Non
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     return configure(builder.getOrCreate())
+
+
+def tree_fingerprint(path: str) -> tuple | None:
+    """Cheap identity of an on-disk table (os.walk, no Spark job), for
+    reusing its DataFrame plan while its files are unchanged: the
+    sorted (relpath, name, size, mtime_ns) of every data file at any
+    depth under `path` (files named `_*` / `.*` are metadata and
+    skipped); a plain file is its own one entry. Adding, removing or rewriting a data file —
+    nested partition files included — changes it. () when no data file
+    is there; None when a file vanished mid-walk (do not reuse)."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return ((".", os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        out = []
+        for root, _dirs, files in os.walk(path):
+            rel = os.path.relpath(root, path)
+            for f in files:
+                if f.startswith(("_", ".")):
+                    continue
+                st = os.stat(os.path.join(root, f))
+                out.append((rel, f, st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(out))

@@ -21,13 +21,11 @@ label-less series).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsdb_spark import labels as L
-from tsdb_spark.session import configure
+from tsdb_spark.session import configure, tree_fingerprint
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -52,29 +50,14 @@ _CANON: dict[str, dict[str, str]] = {
 # query 3x). A DataFrame is an immutable plan, so reusing the object is
 # pure metadata reuse — no data, no results are cached (the plan still
 # scans parquet on every action). Keyed by (session, path, file
-# fingerprint): a rewritten file (mtime/size change) or a new session
-# misses and re-lists, so tests writing their own tables stay correct.
+# fingerprint — session.tree_fingerprint, every file at any depth): a
+# rewritten file (mtime/size change) or a new session misses and
+# re-lists, so tests writing their own tables stay correct.
 _TABLE_CACHE: dict[tuple, DataFrame] = {}
 
 
-def _file_fingerprint(path: str):
-    try:
-        st = os.stat(path)
-        if os.path.isdir(path):
-            parts = []
-            for e in sorted(os.listdir(path)):
-                if e.startswith(("_", ".")):
-                    continue
-                s = os.stat(os.path.join(path, e))
-                parts.append((e, s.st_mtime_ns, s.st_size))
-            return (st.st_mtime_ns, tuple(parts))
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return None
-
-
 def _table_memo(spark: SparkSession, path: str, tag: str, build):
-    fp = _file_fingerprint(path)
+    fp = tree_fingerprint(path)
     if fp is None:
         return build()
     key = (spark.sparkContext.applicationId, path, tag, fp)
